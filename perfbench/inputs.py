@@ -2,18 +2,22 @@
 
 Every input is a pure function of (size, seed) and is written to parquet
 before anything is timed; the program under test only ever reads those files.
+Generation runs in this process with numpy/pyarrow, not as a Spark job, so
+set-up time is not mixed with the session's first-job warm-up.
 
-link_batch: ``synth_repo_files(rows, seed)`` (the repo's own fixture
-generator) plus a planted skew tail. The tail is what makes all three key
-tiers of the pair stage run at a size that fits the benchmark's time budget:
-the fixture's heavy groups only cross the chain threshold
-(``mega_key_threshold`` = 512 members) above ~100k rows, and a pass at that
-size takes about a minute on four cores. Each tail family is one base file
+link_batch: the rows ``synth_repo_files(rows, seed)`` (the repo's own fixture
+generator) yields, built with the fixture's per-id row function, plus a
+planted skew tail. The tail makes the salted and chained key tiers run with
+families of a known size on every seed. Each tail family is one base file
 plus members that append a single unique token, so every member shares the
 family's prefix key and ~98% share each of its MinHash band keys: families of
 90-100 members give keys in the salted tier (64 < n <= 512), families of
 660-670 members give keys in the chained tier (n > 512). Every tenth member is
 an exact copy of the base, which the exact-content collapse absorbs.
+
+The micro-batch stream (link_stream.py, in query_mix's traced run) is a
+second, smaller ``synth_repo_files`` table (seed + 1) split into batches by a
+hash of ``commit``, processed in batch order.
 
 query_mix: the ``documents`` and ``embeddings`` tables the queries read: word
 soup over a 30-word vocabulary with planted " dup" near-duplicates, and
@@ -22,6 +26,7 @@ unit-norm 64-d float32 vectors around ten label centroids.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import numpy as np
@@ -78,29 +83,58 @@ def skew_tail(seed: int) -> pd.DataFrame:
     )
 
 
-def write_repo_files(spark, rows: int, seed: int, out_dir: str) -> tuple[str, str]:
-    """Materialize the link_batch input: (repo_files parquet, truth parquet).
+def _fixture_rows(rows: int, seed: int) -> pd.DataFrame:
+    """What synth_repo_files(spark, rows, seed, with_truth=True) yields: the
+    fixture builds each row from its id alone, so one call over every id
+    gives the same table without a Spark job."""
+    from bela_spark.fixtures import _rows_for_ids
+
+    return _rows_for_ids(np.arange(rows), rows, seed)
+
+
+def record_ids(repos, paths, commits) -> list[str]:
+    """Record ids as the pipeline computes them: sha256(repo||path||commit)."""
+    return [
+        hashlib.sha256(f"{r}||{p}||{c}".encode()).hexdigest()
+        for r, p, c in zip(repos, paths, commits)
+    ]
+
+
+def _write(df: pd.DataFrame, path: str) -> None:
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(
+        pa.Table.from_pandas(df, preserve_index=False), os.path.join(path, "part-0.parquet")
+    )
+
+
+def write_repo_files(rows: int, seed: int, out_dir: str) -> tuple[str, str]:
+    """Materialize the link_batch input: (repo_files dir, truth dir).
 
     The repo_files table holds exactly the five contract columns; the truth
     table maps each record id (sha256 of repo||path||commit, as the pipeline
     computes it) to its planted group."""
-    from pyspark.sql import functions as F
-
-    from bela_spark.fixtures import synth_repo_files
-
-    cols = ["repo", "path", "commit", "lang", "content", "group_id"]
-    tail = spark.createDataFrame(skew_tail(seed)).select(*cols).coalesce(1)
-    full = synth_repo_files(spark, rows, seed=seed, with_truth=True).unionByName(tail)
-    full = full.persist()
+    full = pd.concat([_fixture_rows(rows, seed), skew_tail(seed)], ignore_index=True)
     files = os.path.join(out_dir, "repo_files")
     truth = os.path.join(out_dir, "truth")
-    full.drop("group_id").write.mode("overwrite").parquet(files)
-    full.select(
-        F.sha2(F.concat_ws("||", "repo", "path", "commit"), 256).alias("rid"),
-        "group_id",
-    ).write.mode("overwrite").parquet(truth)
-    full.unpersist()
+    _write(full.drop(columns="group_id"), files)
+    rid = record_ids(full["repo"], full["path"], full["commit"])
+    _write(pd.DataFrame({"rid": rid, "group_id": full["group_id"]}), truth)
     return files, truth
+
+
+def write_stream_batches(rows: int, n_batches: int, seed: int, out_dir: str) -> list[str]:
+    """The micro-batch sequence: synth_repo_files(rows, seed + 1) split into
+    n_batches repo_files dirs by sha256(commit) mod n_batches, in batch order."""
+    df = _fixture_rows(rows, seed + 1).drop(columns="group_id")
+    part = np.array(
+        [int(hashlib.sha256(c.encode()).hexdigest()[:8], 16) % n_batches for c in df["commit"]]
+    )
+    dirs = []
+    for b in range(n_batches):
+        d = os.path.join(out_dir, f"batch{b}")
+        _write(df[part == b], d)
+        dirs.append(d)
+    return dirs
 
 
 DOC_WORDS = (

@@ -4,33 +4,53 @@ over a seeded repo_files parquet table, through the cluster count.
 Set-up: session start and input generation (median of several). A run times
 exactly one pass, the first in a fresh session, which is what a batch job
 pays; a warm-up pass plus a timed one does not fit the run's time budget, so
---seconds does not add passes. The pass time hardly depends on the input
-size at this scale (about 28 s cold at 2k, 3k or 6k synthesized rows on four
-cores), so the size is set for real work, not for time. Untimed after the
-pass: the clusters are recomputed in plain Python from the scored pairs
-(exact-content collapse + connected components), pairwise F1 against the
-planted truth must reach F1_FLOOR, every input row must get one cluster, and
-both the salted and the chained key tiers must have run.
+--seconds does not add passes. Untimed after the pass:
+
+- pairwise F1 of the final clusters against every planted pair (pairs are
+  counted per cluster, per planted group and per (cluster, group), so a
+  planted pair that blocking never produced counts as a miss) must reach
+  F1_FLOOR, and the recall of the planted pairs in small groups must reach
+  SMALL_RECALL_FLOOR;
+- the clusters are recomputed in plain Python from the scored pairs
+  (exact-content collapse + connected components of the accepted edges);
+- every input row gets one cluster, and both the salted and the chained key
+  tiers ran.
 
 The traced run adds a warm traced pass and a warm untraced pass after the
 cold one. The traced pass re-creates run_linkage's sequence of calls, one
 layer per job-group span, materializing each layer's output before the next
-starts; the overhead is its wall time minus the warm untraced pass's. Every
-pass of a run must produce the same outcome.
+starts; the overhead is its wall time minus the warm untraced pass's. Every pass of a run must produce the same
+outcome. Three spans (pipeline.records' exact collapse, pairs' counts join,
+pipeline.assign's representative join) copy code run_linkage holds inline;
+RUN_LINKAGE_AST_SHA pins the run_linkage those copies were taken from, and
+the traced run fails when run_linkage's code differs from it.
 """
 
 from __future__ import annotations
 
+import ast
+import hashlib
+import inspect
 import re
+import textwrap
 import time
 import traceback
 from dataclasses import dataclass
 
 from harness import Harness, log, median
 
-ROWS, SMOKE_ROWS = 8000, 600
+ROWS, SMOKE_ROWS = 16000, 600
 GEN_REPEATS = 3
-F1_FLOOR = 0.99
+# measured at HEAD over 16k-row inputs: F1 0.94-1.00 (a split heavy group
+# costs a few points), small-group recall 0.87-0.89
+F1_FLOOR = 0.85
+# the fixture's ordinary duplicate groups have four members; its heavy groups
+# and the planted families have dozens to hundreds
+SMALL_GROUP = 8
+SMALL_RECALL_FLOOR = 0.8
+# run_linkage's code (AST without its docstring, so comments and docs may
+# change) when traced_pass was last re-synced with it
+RUN_LINKAGE_AST_SHA = "c8b2e8d7697cb36d"
 
 
 @dataclass(frozen=True)
@@ -192,13 +212,66 @@ def traced_pass(
     return Outcome(n_scored, sd, n_cl_rows, n_clusters, cd, salted, chained), c
 
 
-def check_run(run, files: str, truth: str, threshold: float) -> tuple[float, list[str]]:
+def run_linkage_sha() -> str:
+    from bela_spark.pipeline import run_linkage
+
+    fn = ast.parse(textwrap.dedent(inspect.getsource(run_linkage))).body[0]
+    body = fn.body
+    if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+        fn.body = body[1:]
+    return hashlib.sha256(ast.dump(fn).encode()).hexdigest()[:16]
+
+
+def _pairs(counts) -> int:
+    return int(sum(n * (n - 1) // 2 for n in counts))
+
+
+def cluster_scores(clusters: dict, truth: str) -> tuple[float, float]:
+    """(micro pairwise F1 of the final clusters against every planted pair,
+    recall of the planted pairs in groups of at most SMALL_GROUP members).
+    A pair of rows is predicted when they share a cluster and true when they
+    share a planted group. The skew families hold most planted pairs, so the
+    F1 alone would hardly move if every small group were lost; the second
+    figure watches those."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(truth).to_pandas()
+    t["cluster_id"] = t["rid"].map(clusters)
+    hits = t.groupby(["cluster_id", "group_id"]).size()
+    predicted = _pairs(pd.Series(list(clusters.values())).value_counts())
+    sizes = t["group_id"].value_counts()
+    f1 = 2 * _pairs(hits) / max(predicted + _pairs(sizes), 1)
+    small = sizes.index[sizes <= SMALL_GROUP]
+    small_hits = hits[hits.index.get_level_values("group_id").isin(small)]
+    return f1, _pairs(small_hits) / max(_pairs(sizes[small]), 1)
+
+
+def min_components(nodes, edges) -> dict:
+    """{node: the smallest node of its connected component}, over `nodes` and
+    every endpoint of `edges` (union-find)."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in list(parent)}
+
+
+def check_run(run, files: str, threshold: float) -> tuple[dict, list[str]]:
     """Recompute in plain Python what the pipeline derives from its scored
     pairs: one representative per distinct normalized content, and clusters
     = connected components of the accepted edges over representatives, each
-    named by its minimum member id. Also scores the pass: micro pairwise F1
-    of score >= threshold over the unique candidate pairs, against the
-    planted groups. Returns (F1, mismatches found)."""
+    named by its minimum member id. Returns ({rid: cluster_id} as the
+    pipeline produced it, mismatches found)."""
     import pyarrow.parquet as pq
 
     problems = []
@@ -208,32 +281,13 @@ def check_run(run, files: str, truth: str, threshold: float) -> tuple[float, lis
     reps = set(rep_of.values())
     if len(reps) != n_norms:
         problems.append(f"{len(reps)} representatives for {n_norms} distinct contents")
-
-    t = pq.read_table(truth)
-    group = dict(zip(t.column("rid").to_pylist(), t.column("group_id").to_pylist()))
-    parent = {r: r for r in reps}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    tp = fp = fn = 0
-    for a, b, score in run.scored.select("id1", "id2", "score").collect():
-        same, accepted = group[a] == group[b], score >= threshold
-        tp += same and accepted
-        fp += accepted and not same
-        fn += same and not accepted
-        if accepted:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
+    accepted = run.scored.filter(run.scored["score"] >= threshold).select("id1", "id2")
+    component = min_components(reps, accepted.collect())
     got = dict(run.clusters.select("rid", "cluster_id").collect())
-    wrong = sum(got.get(rid) != find(rep) for rid, rep in rep_of.items())
+    wrong = sum(got.get(rid) != component[rep] for rid, rep in rep_of.items())
     if wrong or len(got) != len(rep_of):
         problems.append(f"{wrong} of {len(rep_of)} records in the wrong cluster")
-    return 2 * tp / max(2 * tp + fp + fn, 1), problems
+    return got, problems
 
 
 def run(h: Harness, seed: int) -> dict:
@@ -249,7 +303,7 @@ def run(h: Harness, seed: int) -> dict:
     gen_s = []
     for i in range(GEN_REPEATS):
         t0 = time.perf_counter()
-        files, truth = write_repo_files(spark, rows, seed, h.subdir(f"input{i}"))
+        files, truth = write_repo_files(rows, seed, h.subdir(f"input{i}"))
         gen_s.append(time.perf_counter() - t0)
     n_records = spark.read.parquet(files).count()
     setup_s = session_s + median(gen_s)
@@ -281,9 +335,17 @@ def run(h: Harness, seed: int) -> dict:
         return wall, run, counts
 
     per_layer: dict[str, float] = {}
+    problems = []
     wall, run, _ = timed_pass("pass0", traced=False)
     wall = wall or 0.0  # a pass that raised is reported through failed
     if h.trace:
+        sha = run_linkage_sha()
+        if sha != RUN_LINKAGE_AST_SHA:
+            problems.append(
+                f"pipeline.run_linkage changed (code hash {sha}, traced_pass copies "
+                f"{RUN_LINKAGE_AST_SHA}): re-sync traced_pass's inline copies, then "
+                "RUN_LINKAGE_AST_SHA"
+            )
         # a traced cold pass costs three untraced ones (every layer is
         # materialized on its own while the JIT is still cold), so the traced
         # pass runs warm, after the cold one, and the overhead compares it
@@ -302,7 +364,6 @@ def run(h: Harness, seed: int) -> dict:
             failed += 1
 
     # untimed checks on the last untraced pass (its frames are still cached)
-    problems = []
     f1 = 0.0
     t0 = time.perf_counter()
     if ref is None or run is None:
@@ -312,15 +373,23 @@ def run(h: Harness, seed: int) -> dict:
             problems.append(f"key tiers not all exercised: {ref}")
         if ref.n_rows != n_records:
             problems.append(f"{ref.n_rows} cluster rows for {n_records} input rows")
-        f1, found = check_run(run, files, truth, cfg.score_threshold)
+        clusters, found = check_run(run, files, cfg.score_threshold)
         problems += found
+        f1, small_recall = cluster_scores(clusters, truth)
         if f1 < F1_FLOOR:
             problems.append(f"pairwise F1 {f1:.6f} below {F1_FLOOR}")
+        if small_recall < SMALL_RECALL_FLOOR:
+            problems.append(
+                f"recall {small_recall:.6f} of pairs in groups of <= {SMALL_GROUP} "
+                f"below {SMALL_RECALL_FLOOR}"
+            )
+        log(f"pairwise_f1 {f1:.6f}, small-group recall {small_recall:.6f}")
+    log(f"checks {time.perf_counter() - t0:.2f}s")
+
     if problems:
-        failed += 1  # a wrong answer is a failed pass
+        failed += 1  # a wrong answer is a failed operation
     for p in problems:
         log(f"check failed: {p}")
-    log(f"pairwise_f1 {f1:.6f}; checks {time.perf_counter() - t0:.2f}s")
 
     t0 = time.perf_counter()
     h.stop()

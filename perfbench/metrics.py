@@ -51,6 +51,14 @@ LINKAGE_COUNTS = (
     ("cc.rounds", "count"),
 )
 
+STREAM_COUNTS = (
+    ("ingest.state_records", "count"),
+    ("ingest.touched_key_ratio", "ratio"),
+    ("ingest.first_batch_s", "s"),
+    ("ingest.batch_latency_s", "s"),
+    ("ingest.last_batch_s", "s"),
+)
+
 RUN_INFO = (
     ("trace.overhead_s", "s"),
     ("host.nproc", "count"),
@@ -66,6 +74,8 @@ def layer_metrics(layer: str) -> list[tuple[str, str]]:
 PER_LAYER = tuple(
     [m for layer in LINKAGE_LAYERS for m in layer_metrics(layer)]
     + list(LINKAGE_COUNTS)
+    + layer_metrics("ingest")
+    + list(STREAM_COUNTS)
     + [m for q in QUERIES for m in layer_metrics(f"queries.{q}")]
     + list(RUN_INFO)
 )

@@ -16,6 +16,9 @@ budget (about 30 s more on four cores), so --seconds does not add passes.
 
 Set-up: session start, input generation (median of several), and the DuckDB
 oracle results, normalized the way scripts/check_oracles.py does.
+
+The traced run also runs the micro-batch stream (link_stream.py) after the
+queries, for the `ingest` layer.
 """
 
 from __future__ import annotations
@@ -26,9 +29,11 @@ import time
 import traceback
 
 from harness import Harness, log, median
+from link_stream import run_stream
 from metrics import QUERIES
 
-DOCS, VECS = 400, 400
+# the row counts of the sf0.01 documents / embeddings tables
+DOCS, VECS = 500, 500
 SMOKE_DOCS, SMOKE_VECS = 120, 120
 GEN_REPEATS = 3
 OVERHEAD_QUERY = ("el_detect_f1",)
@@ -138,6 +143,12 @@ def run(h: Harness, seed: int) -> dict:
         untraced_warm, _ = timed_pass("warm:", OVERHEAD_QUERY)
         traced_warm, _ = timed_pass("trace-warm:", OVERHEAD_QUERY)
         per_layer["trace.overhead_s"] = traced_warm - untraced_warm
+        # the micro-batch stream (link_stream.py): too slow for every run,
+        # so it is measured here, in the traced run with the most headroom
+        n, bad, counts = run_stream(h, seed)
+        attempted += n
+        failed += bad
+        per_layer.update(counts)
     else:
         wall, f1 = timed_pass("pass0:")
 
@@ -145,6 +156,7 @@ def run(h: Harness, seed: int) -> dict:
     if h.trace:
         for name in QUERIES:
             per_layer.update(h.layer_stats(f"queries.{name}", f"trace:queries.{name}"))
+        per_layer.update(h.layer_stats("ingest", "trace:ingest"))
     m = h.group_metrics(*(f"pass0:queries.{n}" for n in QUERIES))
     return {
         "correct": failed == 0 and f1 > 0,

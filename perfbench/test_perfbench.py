@@ -1,7 +1,7 @@
 """The benchmark's own tests: `python3 -m pytest perfbench -q` from the repo root.
 
 The smoke tests run each workload end to end on tiny inputs, untraced and
-traced (about a minute each on four cores).
+traced (one to three minutes each on four cores).
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
 from eventlog import metrics_by_group  # noqa: E402
+from link_batch import RUN_LINKAGE_AST_SHA, cluster_scores, min_components, run_linkage_sha  # noqa: E402
 from metrics import END_TO_END, PER_LAYER  # noqa: E402
 
 
@@ -69,6 +70,38 @@ def test_event_log_folds_tasks_into_their_job_group(tmp_path):
     assert (m.shuffle_read_mb, m.shuffle_write_mb) == (2.0, 4.0)
 
 
+def test_cluster_scores_count_planted_pairs_never_clustered(tmp_path):
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # planted: {a, b, c}, {d, e} and a 9-member group; clustered: {a, b},
+    # {c}, {d, e} and the 9 together, so the planted pairs a-c and b-c are
+    # misses although no scored pair names them
+    big = [f"z{i}" for i in range(9)]
+    truth = pd.DataFrame(
+        {"rid": list("abcde") + big, "group_id": list("gggHH") + ["Z"] * 9}
+    )
+    pq.write_table(pa.Table.from_pandas(truth), str(tmp_path / "t.parquet"))
+    clusters = {"a": "a", "b": "a", "c": "c", "d": "d", "e": "d", **{z: "z0" for z in big}}
+    f1, small_recall = cluster_scores(clusters, str(tmp_path / "t.parquet"))
+    # tp = 1 + 1 + 36, predicted = 38, planted = 3 + 1 + 36
+    assert f1 == 2 * 38 / (38 + 40)
+    # the 9-member group is not small: 2 of the 4 small-group pairs hit
+    assert small_recall == 2 / 4
+
+
+def test_min_components_names_each_component_by_its_smallest_node():
+    got = min_components({"a", "b", "c", "d", "e"}, [("d", "b"), ("c", "d"), ("f", "e")])
+    assert got == {"a": "a", "b": "b", "c": "b", "d": "b", "e": "e", "f": "e"}
+
+
+def test_traced_pass_is_synced_with_run_linkage():
+    # traced_pass copies three inline steps of run_linkage; when this fails,
+    # re-sync those copies with run_linkage, then RUN_LINKAGE_AST_SHA
+    assert run_linkage_sha() == RUN_LINKAGE_AST_SHA
+
+
 def test_fails_without_the_program(tmp_path):
     shutil.copy(os.path.join(ROOT, "BENCHMARK.json"), tmp_path)
     shutil.copytree(HERE, tmp_path / "perfbench",
@@ -99,3 +132,5 @@ def test_smoke(workload, trace):
         assert out["metrics"]["scoring.wall_s"]["value"] > 0
     else:
         assert out["metrics"]["queries.el_detect_f1.wall_s"]["value"] > 0
+        assert out["metrics"]["ingest.wall_s"]["value"] > 0
+        assert out["metrics"]["ingest.state_records"]["value"] > 0
