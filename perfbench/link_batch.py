@@ -16,11 +16,12 @@ pays; a warm-up pass plus a timed one does not fit the run's time budget, so
 - every input row gets one cluster, and both the salted and the chained key
   tiers ran.
 
-The traced run adds a warm traced pass and a warm untraced pass after the
-cold one. The traced pass re-creates run_linkage's sequence of calls, one
-layer per job-group span, materializing each layer's output before the next
-starts; the overhead is its wall time minus the warm untraced pass's. Every pass of a run must produce the same
-outcome. Three spans (pipeline.records' exact collapse, pairs' counts join,
+The traced run makes a cold warm-up pass over the smoke-size input, then a
+warm traced pass and a warm untraced pass over the full one. The traced pass
+re-creates run_linkage's sequence of calls, one layer per job-group span,
+materializing each layer's output before the next starts; the overhead is
+its wall time minus the warm untraced pass's. Both passes must produce the
+same outcome. Three spans (pipeline.records' exact collapse, pairs' counts join,
 pipeline.assign's representative join) copy code run_linkage holds inline;
 RUN_LINKAGE_AST_SHA pins the run_linkage those copies were taken from, and
 the traced run fails when run_linkage's code differs from it.
@@ -336,9 +337,9 @@ def run(h: Harness, seed: int) -> dict:
 
     per_layer: dict[str, float] = {}
     problems = []
-    wall, run, _ = timed_pass("pass0", traced=False)
-    wall = wall or 0.0  # a pass that raised is reported through failed
-    if h.trace:
+    if not h.trace:
+        wall, run, _ = timed_pass("pass0", traced=False)
+    else:
         sha = run_linkage_sha()
         if sha != RUN_LINKAGE_AST_SHA:
             problems.append(
@@ -346,14 +347,26 @@ def run(h: Harness, seed: int) -> dict:
                 f"{RUN_LINKAGE_AST_SHA}): re-sync traced_pass's inline copies, then "
                 "RUN_LINKAGE_AST_SHA"
             )
-        # a traced cold pass costs three untraced ones (every layer is
-        # materialized on its own while the JIT is still cold), so the traced
-        # pass runs warm, after the cold one, and the overhead compares it
-        # with a warm untraced pass after it
+        # a cold traced pass costs far more than an untraced one (every layer
+        # is materialized on its own while the JIT is still cold), so the
+        # traced pass runs warm, and the overhead compares it with a warm
+        # untraced pass after it. The warm-up is one untraced pass over the
+        # smoke-size input (with the same skew tail, so every code path runs),
+        # which costs less than a cold pass over the full input.
+        warmup, _ = write_repo_files(SMOKE_ROWS, seed, h.subdir("warmup"))
+        attempted += 1
+        try:
+            with h.span("warmup"):
+                linkage_pass(spark, warmup, cfg)
+        except Exception:
+            log(traceback.format_exc())
+            failed += 1
+        log(f"warm-up {h.walls['warmup']:.3f}s")
         traced_warm, _, per_layer = timed_pass("trace:", traced=True)
-        warm, run, _ = timed_pass("warm", traced=False)
-        if warm is not None and traced_warm is not None:
-            per_layer["trace.overhead_s"] = traced_warm - warm
+        wall, run, _ = timed_pass("warm", traced=False)
+        if wall is not None and traced_warm is not None:
+            per_layer["trace.overhead_s"] = traced_warm - wall
+    wall = wall or 0.0  # a pass that raised is reported through failed
 
     # every pass of a run must produce the same outcome (a traced pass
     # re-creates run_linkage's calls, so this catches drift between them)
