@@ -11,8 +11,9 @@ then the connected components link_batch measures).
 A pass runs the query list once, in a fixed order, each query collected
 before the next starts. A run times exactly one pass: the first execution of
 each query in a fresh session, which is how a one-off query runs. A warm
-second pass measures a different regime and does not fit the run's time
-budget (about 30 s more on four cores), so --seconds does not add passes.
+second pass measures a different regime, adds about 20 s to a run on four
+cores, and spread no less than the cold pass over the same runs (README.md,
+Steadiness), so --seconds does not add passes.
 
 Set-up: session start, input generation (median of several), and the DuckDB
 oracle results, normalized the way scripts/check_oracles.py does.
